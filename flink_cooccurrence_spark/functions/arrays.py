@@ -33,7 +33,12 @@ def _fmt(x: float) -> str:
 
 
 def lit_doubles(xs) -> Column:
-    """array<double> literal column — one py4j call for the whole array."""
+    """array<double> literal column — one py4j call for the whole array.
+    Empty input raises: ``array()`` would parse as an untyped
+    ``array<void>``, not ``array<double>``."""
+    xs = list(xs)
+    if not xs:
+        raise ValueError("lit_doubles needs at least one element")
     return F.expr("array(" + ",".join(_fmt(x) for x in xs) + ")")
 
 

@@ -608,6 +608,14 @@ def _ivf_pq_residual_topk(
         fit = residual_pq_fit(
             embeddings, m, ksub, n_iter, centroids=centroids
         )
+    else:
+        # a shared fit built with other settings would silently code
+        # against mismatched codebooks
+        for key, want in (("m", m), ("ksub", ksub), ("n_iter", n_iter)):
+            if fit[key] != want:
+                raise ValueError(
+                    f"fit was built with {key}={fit[key]}, call asks {want}"
+                )
     cent_frame, res, books = fit["cent_frame"], fit["res"], fit["books"]
     # the fit's home-cell assignment is reused when this member probes a
     # single cell; a multi-probe member ranks top-nprobe against the SAME

@@ -14,16 +14,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Half the host's physical memory: a heap sized past what the host
+    has never forces a GC before the kernel's OOM killer fires."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "4g"
+    return f"{total // 2 // (1 << 20)}m"
+
+
 def get_spark(
     app_name: str = "flink_cooccurrence_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # host-derived defaults; SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM
+    # override both
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count() or 1
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -43,7 +56,7 @@ def get_spark(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # stdout hygiene: the console progress bar writes CR-spam that
         # consumed the driver's bench stdout-tail capture in round 5

@@ -173,14 +173,15 @@ class DedupStreamEngine:
         self._write_pool = concurrent.futures.ThreadPoolExecutor(max_workers=4)
         self._pending: list = []
         self._cached: list = []
-        #: pipelined-replay continuation (same design as the cooccurrence
-        #: engine, single barrier): (batch_id, cached frames) of a batch
-        #: whose six writes are in flight and whose commit is owed. The
-        #: NEXT batch settles it right after its own heavy head (minhash
-        #: localCheckpoint + stats action — pure batch functions that read
-        #: no state), which is exactly before its first state read; this
-        #: batch's submissions and scalars all land after the settle, so
-        #: every commit contains precisely its own batch.
+        #: pipelined-replay continuation (single barrier; it pays >= 10%
+        #: of replay wall here, unlike on the cooccurrence engine, which
+        #: replays synchronously — SCALING.md): (batch_id, cached frames)
+        #: of a batch whose six writes are in flight and whose commit is
+        #: owed. The NEXT batch settles it right after its own heavy head
+        #: (minhash localCheckpoint + stats action — pure batch functions
+        #: that read no state), which is exactly before its first state
+        #: read; this batch's submissions and scalars all land after the
+        #: settle, so every commit contains precisely its own batch.
         self._deferred: tuple[int, list] | None = None
         #: scalar updates of the current batch, staged until after the
         #: settle AND after `_maybe_compact`'s reservation commit — that

@@ -49,17 +49,15 @@ windows_per_batch=1)`` or a file source emitting one window per file)
 recovers exactly the reference's emission cadence; the cumulative state is
 identical either way.
 
-Replay PIPELINING (round 7): in ``replay()`` mode, batches overlap across
-iterations — each leaves its writes in flight and its commit owed, and
-the successor settles them in two phases placed exactly before its first
-read of each table group, with the post-stats plan construction running
-as an async score tail (see ``_settle_phase1``/``_phase2_barrier``/
-``_run_batch`` and SCALING.md). Per-batch transaction boundaries are
-unchanged: delta-stage writes are held back and scalars staged past the
-barrier, so every commit contains precisely its own batch. The
-``attach()``/``process_batch`` path stays strictly synchronous — a
-streaming checkpoint must never acknowledge a batch whose state commit
-is still owed.
+Replay is the same loop: ``replay()`` slices the source into window
+chunks and calls ``process_batch`` on each, exactly as ``attach()``'s
+``foreachBatch`` does, so batch == stream holds by construction. Each
+batch is one synchronous transaction. Within a batch, independent state
+and output writes overlap on a small write pool (with the stats action
+and the rescore), and all of them are joined before the commit; nothing
+crosses a batch boundary. Overlapping batches saved ~5% of replay wall
+(SCALING.md, "Synchronous replay") — too little for the cross-batch
+transaction bookkeeping it needs.
 """
 
 from __future__ import annotations
@@ -136,46 +134,13 @@ class CooccurrenceStreamEngine:
         # Spark jobs (the reference's operators all run concurrently in one
         # dataflow; foreachBatch would otherwise serialize them) — each put
         # touches only its own table's version pointer, and process_batch
-        # joins every pending write before rescoring reads state back,
-        # before commit, and before any rollback
+        # joins every pending write before commit and before any rollback.
+        # Only the driver thread submits, so ``_pending`` needs no lock.
         import concurrent.futures
 
         self._write_pool = concurrent.futures.ThreadPoolExecutor(max_workers=4)
         self._pending: list = []
-        #: guards _pending: the score tail SUBMITS from a pool thread while
-        #: a tagged drain on the driver thread rebuilds the list — without
-        #: the lock an append landing between the drain's keep-scan and its
-        #: reassignment would silently drop a live write future from
-        #: tracking (a commit could then land before that write finished)
-        import threading
-
-        self._pending_lock = threading.Lock()
         self._cached: list = []
-        #: pipelined-replay continuation: (batch_id, cached DataFrames,
-        #: phase1_done) of a batch whose writes are still in flight and
-        #: whose commit is owed. Phase 1 (right after the next batch's
-        #: early action) awaits only the DELTA-STAGE tables — the ones the
-        #: next batch's delta stage reads (user_counts, user_histories,
-        #: item_counts, feedback); phase 2 (right after the next batch's
-        #: combined stats action, or ``flush()``/``close()``) awaits the
-        #: rest (item_rows, row_sums, top-K log) and commits. Each wait
-        #: point thus lands where the awaited jobs have already had the
-        #: successor's early/stats windows to run in.
-        self._deferred: tuple[int, list, bool] | None = None
-        #: delta-stage write closures of the CURRENT batch, held back until
-        #: the phase-2 barrier so their completions (which advance version
-        #: pointers) can never land inside the predecessor's commit
-        self._queued: list = []
-        #: scalar updates of the current batch staged until the phase-2
-        #: barrier for the same reason (transaction hygiene: a batch's
-        #: scalars belong in its OWN commit, not the predecessor's)
-        self._staged_scalars: list = []
-        #: flips False at the phase-2 barrier: later delta-stage submissions
-        #: (e.g. the feedback swap rider) go straight to the pool
-        self._pre_barrier: bool = True
-        #: True while the current batch runs in pipelined (deferred) mode —
-        #: routes the score tail onto the pool instead of inline
-        self._defer_active: bool = False
         #: per-batch wall clock, appended by replay() (harness observability;
         #: bench reports max/mean so single-batch latency spikes are visible)
         self.replay_batch_seconds: list[float] = []
@@ -190,46 +155,18 @@ class CooccurrenceStreamEngine:
         """State hash bucket of a key column (user or item)."""
         return F.pmod(F.hash(F.col(col)), F.lit(self.state_buckets)).cast("int")
 
-    def _submit_direct(self, fn, tag: str = "out") -> None:
-        """Hand a task straight to the pool under ``tag`` — used by code
-        that already runs past the phase-2 barrier (the score tail, the
-        feedback rider), where the hold-back below must not re-queue into
-        the NEXT batch's state."""
-        with self._pending_lock:
-            self._pending.append((tag, self._write_pool.submit(fn)))
+    def _submit(self, fn) -> None:
+        """Run a state/output write on the pool; joined by ``_drain_writes``."""
+        self._pending.append(self._write_pool.submit(fn))
 
-    def _submit_write(self, fn, delta_stage: bool = False) -> None:
-        """Submit an async state/output write. ``delta_stage=True`` marks
-        writes of tables the NEXT batch's delta stage reads — before the
-        phase-2 barrier they are held back (queued) so their completions
-        cannot advance pointers into the predecessor's pending commit."""
-        if delta_stage and self._pre_barrier:
-            self._queued.append(fn)
-            return
-        self._submit_direct(fn, "delta" if delta_stage else "out")
-
-    def _drain_writes(self, tag: str | None = None) -> None:
-        """Join in-flight writes (all, or just one tag's); re-raise the
-        first failure (after all have settled, so a later rollback can't
-        race a still-running put). Loops until the filtered set is empty:
-        a drained task (the async score tail) may itself have submitted
-        further writes while we waited."""
-        first_err: BaseException | None = None
-        while True:
-            with self._pending_lock:
-                if tag is None:
-                    pending, self._pending = self._pending, []
-                else:
-                    pending = [p for p in self._pending if p[0] == tag]
-                    self._pending = [p for p in self._pending if p[0] != tag]
-            if not pending:
-                break
-            for _tag, f in pending:
-                err = f.exception()
-                if err is not None and first_err is None:
-                    first_err = err
-        if first_err is not None:
-            raise first_err
+    def _drain_writes(self) -> None:
+        """Join every in-flight write; re-raise the first failure only after
+        all have settled, so a later rollback can't race a still-running
+        put."""
+        pending, self._pending = self._pending, []
+        errors = [e for e in (f.exception() for f in pending) if e is not None]
+        if errors:
+            raise errors[0]
 
     # ------------------------------------------------------------------ api
 
@@ -242,112 +179,10 @@ class CooccurrenceStreamEngine:
         A batch id at or below the committed high-water mark is skipped
         outright — covers the crash window between the state commit and the
         streaming checkpoint commit, where Spark re-delivers the batch."""
-        self._run_batch(batch, batch_id, defer=False)
-
-    def flush(self) -> None:
-        """Settle any deferred (pipelined-replay) batch: drain its in-flight
-        writes, commit it, release its caches. No-op when nothing is owed."""
-        self._settle()
-
-    def _settle_phase1(self) -> None:
-        """Await only the deferred predecessor's DELTA-STAGE writes — the
-        tables this batch's delta stage is about to read. Its output-side
-        writes (item_rows/row_sums/top-K) keep running; they are awaited at
-        the phase-2 barrier after this batch's combined stats action, which
-        is the next point anything reads them."""
-        if self._deferred is None or self._deferred[2]:
-            return
-        batch_id, cached, _ = self._deferred
-        try:
-            self._drain_writes("delta")
-        except BaseException:
-            self._abort_deferred()
-            raise
-        self._deferred = (batch_id, cached, True)
-
-    def _settle(self) -> None:
-        """Complete the deferred predecessor batch of the pipelined replay.
-
-        Its write jobs were left in flight so they could overlap the next
-        batch's cache fill, early action, and combined stats action; the
-        commit was owed with them. A drain/commit failure here rolls back
-        to the last committed batch and removes the dead batch's top-K
-        emissions — the same transaction contract as the synchronous path,
-        one batch later."""
-        if self._deferred is None:
-            return
-        batch_id, cached, _ = self._deferred
-        self._deferred = None
-        try:
-            self._drain_writes()
-            self.state.set_scalar("last_batch_id", int(batch_id))
-            self.state.commit()
-        except BaseException:
-            self.state.rollback()
-            import shutil
-
-            shutil.rmtree(
-                os.path.join(self._topk_dir, f"batch-{batch_id}"),
-                ignore_errors=True,
-            )
-            raise
-        finally:
-            for df in cached:
-                df.unpersist(blocking=False)
-
-    def _abort_deferred(self) -> None:
-        """Failure path for a deferred batch whose writes went bad: settle
-        everything in flight, roll back to the last commit, drop its top-K
-        emissions, release its caches."""
-        if self._deferred is None:
-            return
-        batch_id, cached, _ = self._deferred
-        self._deferred = None
-        try:
-            self._drain_writes()
-        except BaseException:
-            pass
-        self.state.rollback()
-        import shutil
-
-        shutil.rmtree(
-            os.path.join(self._topk_dir, f"batch-{batch_id}"), ignore_errors=True
-        )
-        for df in cached:
-            df.unpersist(blocking=False)
-
-    def _phase2_barrier(self) -> None:
-        """The pipelined replay's commit point, placed right after the
-        current batch's combined stats action (its one heavy driver-side
-        action): fully settle + COMMIT the deferred predecessor, then flush
-        this batch's staged scalars and held-back delta-stage writes. The
-        ordering guarantees the predecessor's manifest contains exactly its
-        own pointer advances and scalars — nothing of this batch has been
-        submitted or applied before its commit."""
-        self._settle()
-        staged, self._staged_scalars = self._staged_scalars, []
-        for op in staged:
-            op()
-        self._pre_barrier = False
-        queued, self._queued = self._queued, []
-        for fn in queued:
-            self._submit_direct(fn, "delta")
-
-    def _run_batch(self, batch: DataFrame, batch_id: int, defer: bool) -> None:
-        if batch_id <= self.state.get_scalar("last_batch_id", -1) or (
-            self._deferred is not None and batch_id <= self._deferred[0]
-        ):
+        if batch_id <= self.state.get_scalar("last_batch_id", -1):
             return
         self._cached = []
         self._stat_riders = []
-        self._queued = []
-        self._staged_scalars = []
-        # the hold-back only exists to protect a deferred predecessor's
-        # pending commit; with nothing deferred (the synchronous path),
-        # delta-stage writes submit immediately and keep their old overlap
-        # with the delta stage itself
-        self._pre_barrier = defer or self._deferred is not None
-        self._defer_active = defer
         try:
             batch = self._ensure_seq(batch)
             # a true Structured Streaming micro-batch arrives materialized;
@@ -360,16 +195,7 @@ class CooccurrenceStreamEngine:
             batch, u_buckets, i_buckets, max_user_rows, early = self._early_stats(
                 batch
             )
-            # pipelined replay, phase 1: await only the predecessor's
-            # DELTA-STAGE writes — the tables this batch's delta stage
-            # reads next. Its output-side writes and its commit ride until
-            # the phase-2 barrier after this batch's stats action
-            # (``_phase2_barrier``), so every wait point lands where the
-            # awaited jobs have already had a long window to run in. No
-            # read ever sees missing data: each state read below happens
-            # strictly after the phase that awaits its table's writes.
-            self._settle_phase1()
-            self._stage_early_stats(early)
+            self._apply_early_stats(early)
             if self.config.skip_cuts:
                 delta, rs_delta = self._nonsampled_deltas(batch, u_buckets)
             else:
@@ -377,14 +203,6 @@ class CooccurrenceStreamEngine:
                     batch, u_buckets, i_buckets, max_user_rows
                 )
             self._merge_and_score(delta, rs_delta, batch_id)
-            if defer:
-                # leave the writes in flight and the commit owed: the next
-                # batch settles them in two phases (or replay's trailing
-                # flush does). The caches stay alive until then — the
-                # in-flight jobs read them.
-                self._deferred = (batch_id, self._cached, False)
-                self._cached = []
-                return
             self._drain_writes()
             # commit INSIDE the transaction scope: a commit failure (e.g.
             # ENOSPC on the manifest) must roll the in-memory pointers and
@@ -393,14 +211,6 @@ class CooccurrenceStreamEngine:
             self.state.set_scalar("last_batch_id", int(batch_id))
             self.state.commit()
         except BaseException:
-            # a deferred predecessor may still be owed its commit and its
-            # writes may be perfectly fine — settle it first so THIS batch's
-            # failure can't discard a good batch (best-effort: its own
-            # failure path already cleaned up after itself)
-            try:
-                self._settle()
-            except BaseException:
-                pass
             # settle every in-flight write before rolling back — a put that
             # completed after rollback would resurrect a dead pointer
             try:
@@ -423,20 +233,12 @@ class CooccurrenceStreamEngine:
             for df in self._cached:
                 df.unpersist(blocking=False)
             self._cached = []
-            # never-submitted writes and never-applied scalars of a failed
-            # batch just drop (rollback semantics want exactly that)
-            self._queued = []
-            self._staged_scalars = []
 
     def close(self) -> None:
-        """Settle any deferred batch, then release the write pool (idle
-        engines otherwise pin their worker threads for process lifetime).
-        Call once processing is done; the engine must not be reused
-        afterwards."""
-        try:
-            self._settle()
-        finally:
-            self._write_pool.shutdown(wait=True)
+        """Release the write pool (idle engines otherwise pin their worker
+        threads for process lifetime). Call once processing is done; the
+        engine must not be reused afterwards."""
+        self._write_pool.shutdown(wait=True)
 
     def attach(
         self,
@@ -518,24 +320,13 @@ class CooccurrenceStreamEngine:
                     (F.col("window_start") >= chunk[0]) & (F.col("window_start") <= chunk[-1])
                 ).drop("window_start")
                 t0 = time.perf_counter()
-                # PIPELINED: each batch leaves its writes in flight and its
-                # commit owed; the next batch settles them right after its
-                # own early action (which reads no state table), so the
-                # drain barrier overlaps the successor's cache fill instead
-                # of idling the driver thread at the end of every batch
-                self._run_batch(batch, base + i // windows_per_batch, defer=True)
+                self.process_batch(batch, base + i // windows_per_batch)
                 # per-batch wall clock, harness-side observability only (no
                 # engine behavior reads it): bench reports max/mean so a
                 # latency SPIKE on one micro-batch — the failure mode totals
                 # hide, e.g. a batch serializing behind an O(|state|)
                 # rewrite — is visible round-over-round
                 self.replay_batch_seconds.append(time.perf_counter() - t0)
-            # the final batch's drain+commit lands here — charge it to the
-            # last batch's wall clock so the per-batch stats stay honest
-            t0 = time.perf_counter()
-            self._settle()
-            if self.replay_batch_seconds:
-                self.replay_batch_seconds[-1] += time.perf_counter() - t0
         finally:
             wdf.unpersist(blocking=False)
 
@@ -717,23 +508,16 @@ class CooccurrenceStreamEngine:
             (int(row["late"] or 0), row["max_ts"]),
         )
 
-    def _stage_early_stats(self, early: tuple[int, int | None]) -> None:
-        """Scalar updates from the early action — STAGED until the phase-2
-        barrier (which runs after the deferred predecessor's commit), so a
-        pipelined batch's scalars never bleed into the predecessor's
-        transaction. Nothing reads these scalars between here and the
-        barrier: the watermark is next read by the NEXT batch's early
-        stage, and the metric counters only by post-batch accessors."""
-
-        def op() -> None:
-            late, max_ts = early
-            self.state.add_scalar("late_elements", late)
-            self.state.add_scalar("batches", 1)
-            if max_ts is not None:
-                wm = self.state.get_scalar("watermark_ms", -(1 << 62))
-                self.state.set_scalar("watermark_ms", max(wm, int(max_ts)))
-
-        self._staged_scalars.append(op)
+    def _apply_early_stats(self, early: tuple[int, int | None]) -> None:
+        """Scalar updates from the early action: late count, batch count and
+        the advanced watermark (first read again by the NEXT batch's early
+        stage)."""
+        late, max_ts = early
+        self.state.add_scalar("late_elements", late)
+        self.state.add_scalar("batches", 1)
+        if max_ts is not None:
+            wm = self.state.get_scalar("watermark_ms", -(1 << 62))
+            self.state.set_scalar("watermark_ms", max(wm, int(max_ts)))
 
     def _count_product_delta(self, bc: DataFrame, prior: DataFrame) -> DataFrame:
         """Aggregated cooccurrence delta in count-product closed form, shared
@@ -846,13 +630,12 @@ class CooccurrenceStreamEngine:
             .withColumn("_bucket", self._bucket("user"))
         )
         # nothing downstream of this batch reads user_counts (next batch
-        # does, after the drain barrier; the plan above is bound to the
+        # does, after this batch's commit; the plan above is bound to the
         # pre-put version dirs) — overlap the write with the stats action
         # and the item_rows/row_sums merges
         if u_buckets:
-            self._submit_write(
-                lambda: self.state.put_parts("user_counts", new_counts, u_buckets),
-                delta_stage=True,
+            self._submit(
+                lambda: self.state.put_parts("user_counts", new_counts, u_buckets)
             )
         return delta, None
 
@@ -925,11 +708,7 @@ class CooccurrenceStreamEngine:
         lifetime rarely crosses kMax mid-batch), so the per-batch cost is
         the non-sampled path's two hash joins instead of an Arrow
         round-trip through the per-user processor."""
-        # staged past the phase-2 barrier (transaction hygiene): nothing
-        # reads this counter within the batch
-        self._staged_scalars.append(
-            lambda: self.state.add_scalar("fast_path_batches", 1)
-        )
+        self.state.add_scalar("fast_path_batches", 1)
         adm = flagged.filter("sampled")
         bc = adm.groupBy("user", "item").agg(F.count("*").cast("long").alias("m"))
         prior = (
@@ -977,24 +756,19 @@ class CooccurrenceStreamEngine:
         )
         self._cached.append(hist_df)
         if u_buckets:
-            self._submit_write(
-                lambda: self.state.put_parts("user_histories", hist_df, u_buckets),
-                delta_stage=True,
+            self._submit(
+                lambda: self.state.put_parts("user_histories", hist_df, u_buckets)
             )
         self._track_max_hist(hist_df, prev_max_hist)
         # no evictions below capacity ⇒ no feedback from this batch; the
         # previous batch's (already consumed into item_counts) swaps out.
         # Pointer-only clear — the former empty put_parts launched a full
         # repartition+write Spark job per fast-path batch to write nothing
-        # (guide §2.4: the cheapest job is the one that never runs). Staged
-        # like a delta-stage write: the pointer zeroing must land in THIS
-        # batch's transaction, never inside the deferred predecessor's
-        # pending commit, and the next batch's feedback read happens only
-        # after its phase-1 settle of this batch.
+        # (guide §2.4: the cheapest job is the one that never runs). This
+        # batch's feedback read stays valid: its plan is bound to the old
+        # dirs, which the committed manifest keeps live until commit.
         if fb_prior_buckets:
-            self._staged_scalars.append(
-                lambda: self.state.clear_parts("feedback", fb_prior_buckets)
-            )
+            self.state.clear_parts("feedback", fb_prior_buckets)
         return delta, None
 
     def _sampled_deltas(
@@ -1080,13 +854,11 @@ class CooccurrenceStreamEngine:
             .filter(F.col("cnt") != 0)
             .withColumn("_bucket", self._bucket("item"))
         )
-        # only the next batch reads item_counts; as a delta-stage write it
-        # is held to the phase-2 barrier in pipelined mode (submitted
-        # immediately in sync mode, where it overlaps the reservoir pass)
+        # only the next batch reads item_counts — the write overlaps the
+        # reservoir pass
         if ic_listed:
-            self._submit_write(
-                lambda: self.state.put_parts("item_counts", new_ic, ic_listed),
-                delta_stage=True,
+            self._submit(
+                lambda: self.state.put_parts("item_counts", new_ic, ic_listed)
             )
 
         # 3. reservoir with history state (op 7): tagged union — one state
@@ -1215,9 +987,8 @@ class CooccurrenceStreamEngine:
             .withColumn("_bucket", self._bucket("user"))
         )
         if u_buckets:
-            self._submit_write(
-                lambda: self.state.put_parts("user_histories", hist_df, u_buckets),
-                delta_stage=True,
+            self._submit(
+                lambda: self.state.put_parts("user_histories", hist_df, u_buckets)
             )
         self._track_max_hist(hist_df, max_hist)
         fb_df = (
@@ -1235,19 +1006,12 @@ class CooccurrenceStreamEngine:
         def _write_feedback(stats_row) -> None:
             listed = sorted(set(fb_prior_buckets) | set(stats_row["fb_buckets"]))
             if listed:
-                # rider callbacks run past the phase-2 barrier (inside the
-                # score tail in pipelined mode), so this delta-stage write
-                # goes STRAIGHT to the pool — _submit_write's hold-back
-                # would re-queue it into the NEXT batch's state. Tagged
-                # "delta": awaited by the next batch's phase 1, which
-                # precedes its feedback read.
-                self._submit_direct(
+                self._submit(
                     lambda: self.state.put_parts(
                         "feedback",
                         fb_df.withColumn("_bucket", self._bucket("item")),
                         listed,
-                    ),
-                    "delta",
+                    )
                 )
 
         self._stat_riders.append((fb_stats, _write_feedback))
@@ -1310,168 +1074,141 @@ class CooccurrenceStreamEngine:
             stats_plan = stats_plan.crossJoin(rider_plan)
         stats = stats_plan.first()  # <- the batch's second (and last)
         #    auxiliary action: delta stats + changed-bucket sets + riders
-        # pipelined replay: the stats action above was the long window the
-        # predecessor's output-side writes ran in — commit it now, then
-        # release this batch's staged scalars and held-back delta writes
-        self._phase2_barrier()
+        for _plan, cb in self._stat_riders:
+            cb(stats)
+        total = self.state.add_scalar(
+            "observed_cooccurrences", int(stats["total_delta"] or 0)
+        )
+        n_changed = int(stats["n_changed"] or 0)
+        self.state.add_scalar("rescored_items", n_changed)
+        delta_buckets = sorted(stats["delta_buckets"])
+        # count-product deltas touch exactly the same items on both tables
+        rs_buckets = (
+            delta_buckets if derived_rs else sorted(stats["rs_buckets"])
+        )
 
-        # everything below is pure plan construction + async submissions —
-        # no Spark action. In pipelined mode it runs as the SCORE TAIL on
-        # the write pool (plan building is mostly py4j round trips that
-        # release the GIL, so it interleaves with the next batch's early
-        # stage on the driver thread); the synchronous path runs it inline.
-        # Snapshots: the tail outlives this batch's engine fields — the
-        # next batch resets ``_stat_riders``/``_cached``, so it captures
-        # the list OBJECTS (``cached`` is the same object the deferred
-        # record holds, so tail-persisted frames are released at settle).
-        riders = self._stat_riders
-        cached = self._cached
+        # partitioned MERGE (op 10/11 state): read + rewrite ONLY the
+        # hash buckets containing changed items — untouched buckets keep
+        # their existing version dirs, so per-batch state I/O tracks the
+        # batch's changed-item footprint instead of the lifetime state
+        # size.
+        #
+        # The post-merge PLANS (new_rows/new_sums) are persisted and
+        # shared between the state writes and the rescore below: round 5
+        # joined both merge futures here and re-read the freshly written
+        # parquet for the rescore, which serialized the batch's critical
+        # path as stats → merges → rescore — ~1.2s of pure wait per
+        # batch at the bench SF. With plan reuse the rescore runs
+        # CONCURRENTLY with the state writes (all joined before commit)
+        # and reads the identical rows the writes
+        # materialize. The pre-merge row_sums bucket pointers are
+        # snapshotted before any write is submitted (nonempty_buckets
+        # reads the in-memory pointer, which a racing put_parts would
+        # advance).
+        rs_prior_nonempty = self.state.nonempty_buckets("row_sums")
 
-        def score_tail() -> None:
-            for _plan, cb in riders:
-                cb(stats)
-            total = self.state.add_scalar(
-                "observed_cooccurrences", int(stats["total_delta"] or 0)
+        new_rows = new_sums = None
+        if delta_buckets:
+            new_rows = (
+                self.state.get_parts(
+                    "item_rows", ITEM_ROWS_SCHEMA, delta_buckets
+                )
+                .unionByName(
+                    delta.selectExpr("item", "other_item", "delta as cnt")
+                )
+                # ONE exchange on item serves three consumers: the merge
+                # aggregation (hash-partitioning on a subset of the group
+                # keys satisfies its clustering), the derived row-sum
+                # fold, and the rescore's per-item rank window — which
+                # would otherwise re-shuffle the cached matrix on the
+                # batch's critical tail
+                .repartition("item")
+                .groupBy("item", "other_item")
+                .agg(F.sum("cnt").alias("cnt"))
+                .filter(F.col("cnt") != 0)
+                .withColumn("_bucket", self._bucket("item"))
+                .persist()
             )
-            n_changed = int(stats["n_changed"] or 0)
-            self.state.add_scalar("rescored_items", n_changed)
-            delta_buckets = sorted(stats["delta_buckets"])
-            # count-product deltas touch exactly the same items on both tables
-            rs_buckets = (
-                delta_buckets if derived_rs else sorted(stats["rs_buckets"])
+            self._cached.append(new_rows)
+            self._submit(
+                lambda: self.state.put_parts(
+                    "item_rows", new_rows, delta_buckets
+                )
             )
 
-            # partitioned MERGE (op 10/11 state): read + rewrite ONLY the
-            # hash buckets containing changed items — untouched buckets keep
-            # their existing version dirs, so per-batch state I/O tracks the
-            # batch's changed-item footprint instead of the lifetime state
-            # size.
-            #
-            # The post-merge PLANS (new_rows/new_sums) are persisted and
-            # shared between the state writes and the rescore below: round 5
-            # joined both merge futures here and re-read the freshly written
-            # parquet for the rescore, which serialized the batch's critical
-            # path as stats → merges → rescore — ~1.2s of pure wait per
-            # batch at the bench SF. With plan reuse the rescore runs
-            # CONCURRENTLY with the state writes (all join at the drain
-            # barrier before commit) and reads the identical rows the writes
-            # materialize. The pre-merge row_sums bucket pointers are
-            # snapshotted before any write is submitted (nonempty_buckets
-            # reads the in-memory pointer, which a racing put_parts would
-            # advance).
-            rs_prior_nonempty = self.state.nonempty_buckets("row_sums")
-
-            new_rows = new_sums = None
-            if delta_buckets:
-                new_rows = (
-                    self.state.get_parts(
-                        "item_rows", ITEM_ROWS_SCHEMA, delta_buckets
-                    )
-                    .unionByName(
-                        delta.selectExpr("item", "other_item", "delta as cnt")
-                    )
-                    # ONE exchange on item serves three consumers: the merge
-                    # aggregation (hash-partitioning on a subset of the group
-                    # keys satisfies its clustering), the derived row-sum
-                    # fold, and the rescore's per-item rank window — which
-                    # would otherwise re-shuffle the cached matrix on the
-                    # batch's critical tail
-                    .repartition("item")
-                    .groupBy("item", "other_item")
-                    .agg(F.sum("cnt").alias("cnt"))
-                    .filter(F.col("cnt") != 0)
+        if rs_buckets:
+            if derived_rs:
+                # conservation identity over the CACHED post-merge
+                # matrix: the changed buckets' full post-merge row sums
+                # without touching the row_sums state parquet (deltas
+                # are non-negative on these paths, so a row with cells
+                # always has a positive sum and no zero-sum rows can be
+                # dropped)
+                new_sums = (
+                    new_rows.groupBy("item")
+                    .agg(F.sum("cnt").alias("row_sum"))
                     .withColumn("_bucket", self._bucket("item"))
                     .persist()
                 )
-                cached.append(new_rows)
-                self._submit_direct(
-                    lambda: self.state.put_parts(
-                        "item_rows", new_rows, delta_buckets
-                    )
-                )
-
-            if rs_buckets:
-                if derived_rs:
-                    # conservation identity over the CACHED post-merge
-                    # matrix: the changed buckets' full post-merge row sums
-                    # without touching the row_sums state parquet (deltas
-                    # are non-negative on these paths, so a row with cells
-                    # always has a positive sum and no zero-sum rows can be
-                    # dropped)
-                    new_sums = (
-                        new_rows.groupBy("item")
-                        .agg(F.sum("cnt").alias("row_sum"))
-                        .withColumn("_bucket", self._bucket("item"))
-                        .persist()
-                    )
-                else:
-                    new_sums = (
-                        self.state.get_parts(
-                            "row_sums", ROW_SUMS_SCHEMA, rs_buckets
-                        )
-                        .unionByName(rs_delta.selectExpr("item", "d as row_sum"))
-                        .groupBy("item")
-                        .agg(F.sum("row_sum").alias("row_sum"))
-                        .withColumn("_bucket", self._bucket("item"))
-                        .persist()
-                    )
-                cached.append(new_sums)
-                self._submit_direct(
-                    lambda: self.state.put_parts("row_sums", new_sums, rs_buckets)
-                )
-
-            if n_changed == 0:
-                return
-            # post-merge rows of the changed buckets == the merge plan
-            # itself (n_changed > 0 implies delta_buckets is nonempty, so
-            # new_rows exists). Changed-item membership is a LEFT SEMI join
-            # against the cached delta — semi joins dedup inherently, so no
-            # distinct aggregation (two extra stages on the batch's critical
-            # tail; the per-batch fixed cost is stage-scheduling-bound at
-            # small batches). Changed-set size is batch-dependent — AQE
-            # decides broadcast vs hash.
-            rows = new_rows.drop("_bucket").join(
-                delta.select("item"), on="item", how="leftsemi"
-            )
-            # full post-merge row sums = untouched buckets (their pointers
-            # are unchanged by the racing write) ∪ the merged changed buckets
-            if rs_buckets:
-                untouched = sorted(set(rs_prior_nonempty) - set(rs_buckets))
-                sums_full = self.state.get_parts(
-                    "row_sums", ROW_SUMS_SCHEMA, untouched
-                ).unionByName(new_sums.drop("_bucket"))
             else:
-                sums_full = self.state.get_parts("row_sums", ROW_SUMS_SCHEMA)
-            scored = scored_rows(rows, sums_full, int(total), round_digits=3)
-            topk = top_k_per_group(
-                scored,
-                ["item"],
-                "score",
-                self.config.top_k,
-                tie_breakers=["other_item"],
-            ).select(
-                F.lit(batch_id).cast("long").alias("batch_id"),
-                "item",
-                "rank",
-                "other_item",
-                "cnt",
-                "score",
-            )
-            # per-batch subdir with overwrite: a retried batch rewrites its
-            # own emissions instead of appending duplicates (idempotent
-            # output log); async — overlaps any still-pending state writes,
-            # joined at the drain barrier before commit
-            self._submit_direct(
-                lambda: topk.write.mode("overwrite").parquet(
-                    os.path.join(self._topk_dir, f"batch-{batch_id}")
+                new_sums = (
+                    self.state.get_parts(
+                        "row_sums", ROW_SUMS_SCHEMA, rs_buckets
+                    )
+                    .unionByName(rs_delta.selectExpr("item", "d as row_sum"))
+                    .groupBy("item")
+                    .agg(F.sum("row_sum").alias("row_sum"))
+                    .withColumn("_bucket", self._bucket("item"))
+                    .persist()
                 )
+            self._cached.append(new_sums)
+            self._submit(
+                lambda: self.state.put_parts("row_sums", new_sums, rs_buckets)
             )
 
-        if self._defer_active:
-            # tagged "delta": the tail may submit delta-stage writes (the
-            # feedback swap rider), so the next batch's phase-1 drain must
-            # wait for the tail itself before trusting the delta tag empty —
-            # the drain loop then picks up anything it submitted meanwhile
-            self._submit_direct(score_tail, "delta")
+        if n_changed == 0:
+            return
+        # post-merge rows of the changed buckets == the merge plan
+        # itself (n_changed > 0 implies delta_buckets is nonempty, so
+        # new_rows exists). Changed-item membership is a LEFT SEMI join
+        # against the cached delta — semi joins dedup inherently, so no
+        # distinct aggregation (two extra stages on the batch's critical
+        # tail; the per-batch fixed cost is stage-scheduling-bound at
+        # small batches). Changed-set size is batch-dependent — AQE
+        # decides broadcast vs hash.
+        rows = new_rows.drop("_bucket").join(
+            delta.select("item"), on="item", how="leftsemi"
+        )
+        # full post-merge row sums = untouched buckets (their pointers
+        # are unchanged by the racing write) ∪ the merged changed buckets
+        if rs_buckets:
+            untouched = sorted(set(rs_prior_nonempty) - set(rs_buckets))
+            sums_full = self.state.get_parts(
+                "row_sums", ROW_SUMS_SCHEMA, untouched
+            ).unionByName(new_sums.drop("_bucket"))
         else:
-            score_tail()
+            sums_full = self.state.get_parts("row_sums", ROW_SUMS_SCHEMA)
+        scored = scored_rows(rows, sums_full, int(total), round_digits=3)
+        topk = top_k_per_group(
+            scored,
+            ["item"],
+            "score",
+            self.config.top_k,
+            tie_breakers=["other_item"],
+        ).select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            "item",
+            "rank",
+            "other_item",
+            "cnt",
+            "score",
+        )
+        # per-batch subdir with overwrite: a retried batch rewrites its
+        # own emissions instead of appending duplicates (idempotent
+        # output log); async — overlaps any still-pending state writes,
+        # joined before commit
+        self._submit(
+            lambda: topk.write.mode("overwrite").parquet(
+                os.path.join(self._topk_dir, f"batch-{batch_id}")
+            )
+        )

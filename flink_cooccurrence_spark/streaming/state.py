@@ -30,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -53,6 +54,12 @@ class StateStore:
         self._meta_path = os.path.join(root, "meta.json")
         self.scalars: dict[str, int] = {}
         self._versions: dict[str, int] = {}
+        #: guards every read-modify-write of ``_versions`` and the commit
+        #: snapshot: the engines' write pools run ``put_parts`` for distinct
+        #: tables on pool threads while the driver thread may clear, append
+        #: or commit. Held for pointer updates only, never across a Spark
+        #: write, so concurrent puts still overlap.
+        self._lock = threading.Lock()
         #: segment ids reserved by an in-flight two-phase compaction
         #: (``begin_compact_append`` adds, ``finish`` discards). GC must
         #: treat them as live: once a LATER batch appends and commits, the
@@ -129,7 +136,8 @@ class StateStore:
         batch is retried (same next-version numbers)."""
         v = self._versions.get(name, 0) + 1
         df.write.mode("overwrite").parquet(self._path(name, v))
-        self._versions[name] = v
+        with self._lock:
+            self._versions[name] = v
         # GC keeps the in-memory pointer AND the committed (rollback-target)
         # pointer live — a blind v−RETAIN delete would destroy the rollback
         # target when a batch puts the same table more than once
@@ -204,10 +212,12 @@ class StateStore:
             for d in os.listdir(self._path(name, v))
             if d.startswith("_bucket=")
         }
-        bmap = dict(ptr["buckets"])
-        for b in buckets:
-            bmap[str(b)] = v if str(b) in written else 0
-        self._versions[name] = {"latest": v, "buckets": bmap}
+        with self._lock:
+            cur = self._versions.get(name)
+            bmap = dict(cur["buckets"]) if isinstance(cur, dict) else {}
+            for b in buckets:
+                bmap[str(b)] = v if str(b) in written else 0
+            self._versions[name] = {"latest": v, "buckets": bmap}
         self._gc_parts(name)
 
     def clear_parts(self, name: str, buckets: list[int]) -> None:
@@ -220,13 +230,14 @@ class StateStore:
         content is transient (the feedback swap) clears its stale buckets
         with no cluster work at all."""
         self._expect_layout(name, "parts")
-        ptr = self._versions.get(name)
-        if not isinstance(ptr, dict):
-            ptr = {"latest": 0, "buckets": {}}
-        bmap = dict(ptr["buckets"])
-        for b in buckets:
-            bmap[str(b)] = 0
-        self._versions[name] = {"latest": ptr["latest"], "buckets": bmap}
+        with self._lock:
+            ptr = self._versions.get(name)
+            if not isinstance(ptr, dict):
+                ptr = {"latest": 0, "buckets": {}}
+            bmap = dict(ptr["buckets"])
+            for b in buckets:
+                bmap[str(b)] = 0
+            self._versions[name] = {"latest": ptr["latest"], "buckets": bmap}
         self._gc_parts(name)
 
     def _gc_parts(self, name: str) -> None:
@@ -280,9 +291,11 @@ class StateStore:
             for d in os.listdir(path)
             if d.startswith("_bucket=")
         )
-        segments = dict(ptr["segments"])
-        segments[str(seg)] = written
-        self._versions[name] = {"latest": seg, "segments": segments}
+        with self._lock:
+            cur = self._versions.get(name)
+            segments = dict(cur["segments"]) if isinstance(cur, dict) else {}
+            segments[str(seg)] = written
+            self._versions[name] = {"latest": seg, "segments": segments}
         self._gc_append(name)
 
     def _scan_roots(self, roots: list[str], schema: str) -> DataFrame | None:
@@ -403,14 +416,15 @@ class StateStore:
         concurrently — rollback to a pre-reservation manifest would hand
         the reserved id back to ``append_parts`` while ``run`` writes it."""
         self._expect_layout(name, "append")
-        ptr = self._versions.get(name)
-        if not isinstance(ptr, dict) or "segments" not in ptr:
-            return None
-        snap = dict(ptr["segments"])
-        if not snap:
-            return None
-        seg = ptr["latest"] + 1
-        self._versions[name] = {"latest": seg, "segments": snap}
+        with self._lock:
+            ptr = self._versions.get(name)
+            if not isinstance(ptr, dict) or "segments" not in ptr:
+                return None
+            snap = dict(ptr["segments"])
+            if not snap:
+                return None
+            seg = ptr["latest"] + 1
+            self._versions[name] = {"latest": seg, "segments": snap}
         # pin the reserved id against GC for the compaction's lifetime —
         # `latest` alone stops protecting it as soon as a later batch
         # appends (its id supersedes `latest` in both live sets)
@@ -446,13 +460,16 @@ class StateStore:
                 self._reserved.get(name, set()).discard(seg)
                 self._gc_append(name)
                 return
-            cur = self._versions.get(name)
-            segments = {
-                s: bs for s, bs in cur["segments"].items() if s not in snap
-            }
-            if written:
-                segments[str(seg)] = written
-            self._versions[name] = {"latest": cur["latest"], "segments": segments}
+            with self._lock:
+                cur = self._versions.get(name)
+                segments = {
+                    s: bs for s, bs in cur["segments"].items() if s not in snap
+                }
+                if written:
+                    segments[str(seg)] = written
+                self._versions[name] = {
+                    "latest": cur["latest"], "segments": segments
+                }
             # the swap above makes seg live through `segments` (or, when
             # nothing was written, legitimately dead) — the pin comes off
             # before GC so an empty compaction's dir is collected normally
@@ -486,9 +503,13 @@ class StateStore:
         ONE write-then-rename of the single manifest: the multi-table batch
         update (pointers AND the batch-id/watermark scalars guarding it) is
         all-or-nothing from a restart's point of view."""
+        with self._lock:
+            payload = json.dumps(
+                {"versions": self._versions, "scalars": self.scalars}
+            )
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"versions": self._versions, "scalars": self.scalars}, f)
+            f.write(payload)
         os.replace(tmp, self._meta_path)
         # the manifest supersedes the legacy two-file layout — drop stale
         # copies so a crash can never resurrect older pointers through the
@@ -508,8 +529,9 @@ class StateStore:
         """Discard in-memory state back to the last commit (for retrying a
         failed batch in the same process)."""
         meta = self._committed_meta()
-        self.scalars = dict(meta["scalars"])
-        self._versions = dict(meta["versions"])
+        with self._lock:
+            self.scalars = dict(meta["scalars"])
+            self._versions = dict(meta["versions"])
 
     # -- scalar state (watermark, running total, metric counters) ------------
 

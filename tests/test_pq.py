@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 
 from flink_cooccurrence_spark.operators.pq import (
+    PQ_ITERS,
     PQ_KSUB,
     PQ_M,
     ivf_pq_topk,
@@ -96,6 +97,18 @@ def test_empty_corpus(spark):
     out = ivf_pq_refined_topk(empty)
     assert out.count() == 0
     assert out.columns == ["q_id", "rank", "n_id", "cosine", "cell"]
+
+
+@pytest.mark.parametrize(
+    "key", ["m", "ksub", "n_iter"]
+)
+def test_mismatched_shared_fit_rejected(spark, emb, key):
+    """A caller-supplied residual fit built with other m/ksub/n_iter would
+    code against mismatched codebooks — it must raise, not run."""
+    fit = {"m": PQ_M, "ksub": PQ_KSUB, "n_iter": PQ_ITERS}
+    fit[key] += 1
+    with pytest.raises(ValueError, match=key):
+        ivf_pq_topk(emb, encode="residual", fit=fit)
 
 
 def test_residual_contract_and_recall_at_least_raw(spark, emb):

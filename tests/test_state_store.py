@@ -416,3 +416,40 @@ def test_sync_compact_append_aborts_reservation_on_failed_run(spark, tmp_path):
         st.compact_append("log", SCHEMA, bad_reducer)
     assert st._reserved.get("log", set()) == set()
     assert _rows(st.get_append("log", SCHEMA)) == [(0, 0), (1, 1)]
+
+
+def test_concurrent_put_parts_of_distinct_tables_all_commit(spark, tmp_path):
+    """The engines' write pools run ``put_parts`` for DISTINCT tables on
+    pool threads at once: every pointer must land in the in-memory map
+    and survive commit into the reloaded manifest."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    st = StateStore(spark, str(tmp_path))
+    names = [f"t{i}" for i in range(8)]  # more writers than cores
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # maximize interleaving of pointer updates
+    try:
+        with ThreadPoolExecutor(max_workers=len(names)) as pool:
+            futs = [
+                pool.submit(
+                    st.put_parts,
+                    name,
+                    _bucketed(_df(spark, [(i, 10 + i), (i + 4, 20 + i)])),
+                    [i % 4],
+                )
+                for i, name in enumerate(names)
+            ]
+            for f in futs:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(old_interval)
+    st.commit()
+    reloaded = StateStore(spark, str(tmp_path))
+    for i, name in enumerate(names):
+        assert reloaded._versions[name] == {
+            "latest": 1, "buckets": {str(i % 4): 1}
+        }, name
+        assert _rows(reloaded.get_parts(name, SCHEMA)) == [
+            (i, 10 + i), (i + 4, 20 + i)
+        ]

@@ -603,6 +603,37 @@ def test_native_sampled_stream_bit_identical_to_replay(
     assert native.total_observed() == native_replayed.total_observed()
 
 
+def test_sampled_replay_equals_hand_written_process_batch_loop(
+    spark, native_inputs, native_replayed, tmp_path
+):
+    """``replay(windows_per_batch=2)`` is a plain ``process_batch`` loop:
+    feeding the same two-window slices by hand, with the same batch ids,
+    yields the identical top-K emission log and accumulator metrics on
+    the sampled path (feedback, reservoir and fast-path counters)."""
+    from flink_cooccurrence_spark.operators.cooccurrence import with_window
+
+    sample, _files, _n = native_inputs
+    cfg = _cfg(**NATIVE_CFG_KW)
+    eng = CooccurrenceStreamEngine(spark, cfg, workdir=str(tmp_path / "loop"))
+    wdf = with_window(sample, cfg.window_millis)
+    windows = sorted(
+        r[0] for r in wdf.select("window_start").distinct().collect()
+    )
+    for i in range(0, len(windows), 2):
+        lo, hi = windows[i], windows[min(i + 1, len(windows) - 1)]
+        eng.process_batch(
+            wdf.filter(F.col("window_start").between(lo, hi)).drop(
+                "window_start"
+            ),
+            i // 2,
+        )
+    assert eng.metrics() == native_replayed.metrics()
+    assert_df_equal(
+        eng.topk_updates(), native_replayed.topk_updates(), "loop_topk_log"
+    )
+    eng.close()
+
+
 def test_native_sampled_stream_restart_mid_stream(
     spark, native_inputs, native_replayed, tmp_path
 ):
